@@ -260,7 +260,7 @@ def _cpu_jiffies() -> tuple[int, int, int] | None:
         return None
 
 
-def machine_context(start: tuple[int, int] | None) -> dict[str, float]:
+def machine_context(start: tuple[int, int, int] | None) -> dict[str, float]:
     """Self-describing run conditions (VERDICT r7 "Next round" #2): the
     headline throughput extras have swung 15-30% across identically
     planned runs for three rounds because the box is shared; recording

@@ -1,6 +1,7 @@
 """API façade semantics — the reference's own API test scenarios
 (tests/test_api.py:23-66) through the in-process handlers."""
 
+import math
 import shutil
 import tempfile
 
@@ -65,3 +66,27 @@ def test_limit_cap(store):
     out = query_points(store, 0, 10_000, limit=5)
     assert len(out["points"]) == 5
     assert [p["timestamp"] for p in out["points"]] == [1000, 1001, 1002, 1003, 1004]
+
+
+def test_round_trip_is_bit_exact(store):
+    # points cross the Python-JVM boundary as Arrow both ways: special
+    # doubles, the sign of -0.0, subnormals and extreme timestamps must
+    # come back unchanged, timestamps as Python ints
+    assert ingest_points(store, []) == {"status": "success", "points_ingested": 0}
+    assert query_points(store, -(2**62), 2**62)["points"] == []
+
+    vals = {-5: math.nan, 0: math.inf, 1: -0.0, 2: 1e-310, 2**62: -math.inf}
+    pts = [{"metric": "edge", "timestamp": t, "value": v} for t, v in vals.items()]
+    assert ingest_points(store, pts)["points_ingested"] == len(pts)
+
+    out = query_points(store, -5, 2**62)
+    assert out["metric"] == "edge"  # metric=None echoes the first row's
+    got = out["points"]
+    assert [p["timestamp"] for p in got] == sorted(vals)
+    assert all(type(p["timestamp"]) is int for p in got)
+    for p in got:
+        want = vals[p["timestamp"]]
+        assert type(p["value"]) is float
+        assert math.copysign(1.0, p["value"]) == math.copysign(1.0, want)
+        assert (math.isnan(p["value"]) and math.isnan(want)) or p["value"] == want
+    assert store.points().count() == len(pts)

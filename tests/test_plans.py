@@ -1,5 +1,7 @@
 """Plan-shape assertions: the 100 TB posture, checked programmatically."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,6 +10,7 @@ from time_series_databse_engine_spark.plans import (
     num_shuffles,
     partition_filters,
     pushed_filters,
+    simple_plan,
     uses_broadcast_join,
 )
 from time_series_databse_engine_spark.sources import load_table
@@ -39,6 +42,21 @@ def test_store_partition_pruning(spark, tmp_path):
     )
     df = store.query_range(0, 3000)
     assert any("hour_bucket" in p for p in partition_filters(df))
+
+    # query_range ANDs its bucket, ts_ms and metric predicates into one
+    # filter: one Filter node above the scan, the bucket bound pruning
+    # directories and the ts_ms bounds and metric equality reaching
+    # Parquet; the limit still fuses with the sort into a top-k
+    for k in (1, 5):
+        df = store.query_range(0, 3000, metrics=["m"], limit=k)
+        plan = simple_plan(df)
+        assert len(re.findall(r"\bFilter\b", plan)) == 1, plan
+        assert "TakeOrderedAndProject(limit=%d" % k in plan, plan
+        assert any("hour_bucket" in p for p in partition_filters(df))
+        pushed = ", ".join(pushed_filters(df))
+        for want in ("GreaterThanOrEqual(ts_ms, 0)", "LessThanOrEqual(ts_ms, 3000)",
+                     "EqualTo(metric, m)"):
+            assert want in pushed, pushed
 
 
 def test_windowed_agg_single_shuffle(spark, sf_dir):

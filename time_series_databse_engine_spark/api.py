@@ -2,17 +2,25 @@
 backed by the Spark engine.
 
 Endpoint parity:
-  * ``POST /api/ingest`` accepts ``{metric, timestamp, value}`` and returns
-    ``{"status": "success", "points_ingested": N}`` (reference
+  * ``POST /api/ingest`` accepts one ``{metric, timestamp, value}`` point
+    and returns ``{"status": "success", "points_ingested": N}`` (reference
     api/main.py:67-73).  Divergences done on purpose: ``metric`` is kept
-    (the reference drops it, api/main.py:70) and a batch ``points`` list is
-    accepted alongside single points — per-point synchronous writes are the
-    reference's documented bottleneck (README.md:102).
-  * ``GET /api/query?start_ts&end_ts[&metric][&limit]`` returns
+    (the reference drops it, api/main.py:70), and the in-process
+    ``ingest_points`` takes a whole batch of points in one write —
+    per-point synchronous writes are the reference's documented
+    bottleneck (README.md:102).
+  * ``GET /api/query?start_ts&end_ts[&metric]`` returns
     ``{"metric": ..., "points": [{"timestamp": ms, "value": v}, ...]}``
-    with the same inclusive bounds and 10,000-point cap
-    (api/main.py:85-102); ``metric`` echoes the queried series instead of
-    the reference's hard-coded ``"cpu.load.avg"``.
+    with the same inclusive bounds and the same fixed 10,000-point cap
+    (api/main.py:85-102; the route takes no limit parameter, only the
+    in-process ``query_points`` does); ``metric`` echoes the queried
+    series instead of the reference's hard-coded ``"cpu.load.avg"``.
+
+Point batches cross the Python–JVM boundary as Arrow in both directions:
+``ingest_points`` hands Spark one ``pyarrow.Table`` (a ``LocalRelation``,
+no pickled rows to decode in the write job), and ``query_points`` reads
+the result back with ``toArrow()`` and builds the point dicts from its
+columns instead of un-pickling one ``Row`` per point.
 
 FastAPI is optional in this container: the handler logic lives in plain
 functions (`ingest_points`, `query_points`) so it is fully testable
@@ -24,6 +32,7 @@ from __future__ import annotations
 
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from time_series_databse_engine_spark.tsdb import TimeSeriesStore
@@ -33,10 +42,14 @@ BUFFER_CAPACITY = 10_000  # reference api/main.py:85
 
 def ingest_points(store: TimeSeriesStore, points: list[dict[str, Any]]) -> dict[str, Any]:
     """Batch ingest; each point is {metric, timestamp(ms), value}."""
-    df = store.spark.createDataFrame(
-        [(str(p["metric"]), int(p["timestamp"]), float(p["value"])) for p in points],
-        "metric string, ts_ms long, value double",
+    table = pa.table(
+        {
+            "metric": pa.array([str(p["metric"]) for p in points], pa.string()),
+            "ts_ms": pa.array([int(p["timestamp"]) for p in points], pa.int64()),
+            "value": pa.array([float(p["value"]) for p in points], pa.float64()),
+        }
     )
+    df = store.spark.createDataFrame(table)
     store.ingest(df)
     return {"status": "success", "points_ingested": len(points)}
 
@@ -54,10 +67,15 @@ def query_points(
     df = store.query_range(
         start_ts, end_ts, metrics=[metric] if metric else None, limit=limit
     )
-    rows = df.select("metric", "ts_ms", "value").collect()
+    table = df.select("metric", "ts_ms", "value").toArrow()
+    if not metric:
+        metric = table.column("metric")[0].as_py() if table.num_rows else "cpu.load.avg"
     return {
-        "metric": metric or (rows[0].metric if rows else "cpu.load.avg"),
-        "points": [{"timestamp": r.ts_ms, "value": r.value} for r in rows],
+        "metric": metric,
+        "points": [
+            {"timestamp": t, "value": v}
+            for t, v in zip(table.column("ts_ms").to_pylist(), table.column("value").to_pylist())
+        ],
     }
 
 

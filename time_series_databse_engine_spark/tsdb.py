@@ -658,17 +658,15 @@ class TimeSeriesStore:
         time, exactly the reference's shard loop but O(matching partitions)
         on any cluster size; the ``ts_ms`` predicate additionally prunes row
         groups via min/max stats (which the reference lacked — SURVEY §4.2).
+        All predicates go into ONE ``filter``: every DataFrame call is
+        analysed eagerly over py4j, so chaining them costs a round trip each.
         """
         lo = start_ms // self.bucket_ms
         hi = end_ms // self.bucket_ms
-        df = (
-            self.points()
-            .filter(F.col(self.bucket_col).between(lo, hi))
-            .filter(F.col("ts_ms").between(start_ms, end_ms))
-        )
+        cond = F.col(self.bucket_col).between(lo, hi) & F.col("ts_ms").between(start_ms, end_ms)
         if metrics:
-            df = df.filter(F.col("metric").isin(metrics))
-        df = df.orderBy("ts_ms", "metric")
+            cond = cond & F.col("metric").isin(metrics)
+        df = self.points().filter(cond).orderBy("ts_ms", "metric")
         if limit is not None:
             # reference truncates at buffer capacity (api/main.py:85); here the
             # limit composes with the sort → TakeOrderedAndProject (top-k),
