@@ -1,5 +1,6 @@
 """Dedup family on crafted documents with known duplicate structure."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from time_series_databse_engine_spark.operators.dedup import (
@@ -105,6 +106,20 @@ def test_star_and_label_prop_components_agree(spark):
         st = {r.doc_id: r.cluster_id for r in dedup_clusters_star(df).collect()}
         assert lp == truth, f"label-prop trial {trial}"
         assert st == truth, f"star trial {trial}"
+
+
+@pytest.mark.parametrize("id_type", ["double", "decimal(4,1)"])
+def test_dedup_clusters_fractional_ids_run_to_fixpoint(spark, id_type):
+    """Σlabel convergence is exact only for whole-number ids: on the path
+    1.1–1.2–1.3–1.4 every label rounds to 1 under decimal(38,0), so a
+    sum check stops after round 2 with 1.4 still labelled 1.2."""
+    from time_series_databse_engine_spark.operators.dedup import dedup_clusters
+
+    path = spark.createDataFrame(
+        [(1.1, 1.2), (1.2, 1.3), (1.3, 1.4)], "id1 double, id2 double"
+    ).select(F.col("id1").cast(id_type), F.col("id2").cast(id_type))
+    out = {float(r.doc_id): float(r.cluster_id) for r in dedup_clusters(path).collect()}
+    assert out == {1.1: 1.1, 1.2: 1.1, 1.3: 1.1, 1.4: 1.1}
 
 
 def test_star_handles_chain_graph(spark):

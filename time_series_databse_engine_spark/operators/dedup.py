@@ -541,10 +541,15 @@ def dedup_clusters(
     # monotone: labels only ever DECREASE (new = min(old, incoming)), so
     # Σlabel is unchanged iff NO label changed — one partial-aggregate
     # on the already-id-partitioned table replaces the old-vs-new join
-    # per round (decimal(38,0) keeps the sum exact at any id magnitude).
-    from pyspark.sql.types import NumericType
+    # per round.  Whole-number ids only: decimal(38,0) keeps their sum
+    # exact at any magnitude, but rounds fractional ids, so a real label
+    # change could leave the sum unchanged (false convergence).
+    from pyspark.sql.types import DecimalType, IntegralType
 
-    numeric_ids = isinstance(p.schema["src"].dataType, NumericType)
+    id_type = p.schema["src"].dataType
+    integral_ids = isinstance(id_type, IntegralType) or (
+        isinstance(id_type, DecimalType) and id_type.scale == 0
+    )
     labels = None
     _UNSET = object()
     prev_sum: object = _UNSET
@@ -565,15 +570,15 @@ def dedup_clusters(
             # in the SAME job (r12 opt: one job per round instead of two)
             .localCheckpoint(eager=False)
         )
-        if numeric_ids:
+        if integral_ids:
             label_sum = new_labels.agg(
                 F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
             ).first()["s"]
             converged = prev_sum is not _UNSET and label_sum == prev_sum
             prev_sum = label_sum
         elif labels is not None:
-            # non-numeric ids (string doc keys): Σlabel has no monotone —
-            # keep the exact old-vs-new comparison for them
+            # string or fractional ids: no exact Σlabel monotone — keep
+            # the exact old-vs-new comparison for them
             converged = (
                 new_labels.join(
                     labels.select("id", F.col("label").alias("old")), "id"

@@ -9,8 +9,8 @@ lifecycle is identical up to the partition column and the within-file
 sort:
 
 * single-owner **lease** (append/compact/vacuum assume one owner);
-* idempotent **epoch append** (stage → delete prior attempt → move in
-  under an ``epoch{id}-`` prefix) for streaming exactly-once replay;
+* idempotent **epoch append** (``epoch_commit.prefix_append``) for
+  streaming exactly-once replay;
 * crash-safe **compaction** (move-aside swap, replay-aware absorption);
 * **vacuum** of crashed staging dirs.
 
@@ -206,42 +206,25 @@ def epoch_append(
     enc: DataFrame, path: str, part_col: str, epoch_id: int | None
 ) -> None:
     """Append an already-encoded batch to ``<path>/index`` (partitioned
-    by ``part_col``).  With ``epoch_id`` set the append is IDEMPOTENT
-    (the ``TimeSeriesStore.ingest_epoch`` discipline): the batch stages
-    to a temp dir, any files of a previous attempt of the same epoch
-    are deleted, then the staged files move into the partition
-    directories under an ``epoch{id}-`` name prefix — so a streaming
-    foreachBatch replay of the same micro-batch converges to exactly
-    one copy at any crash point.  Cost vs the blind append: identical
-    distributed work plus O(touched partitions) driver-side renames."""
+    by ``part_col``).  With ``epoch_id`` set the append is IDEMPOTENT:
+    it commits through :func:`epoch_commit.prefix_append` (staged under
+    ``<path>/index-epoch-<id>-tmp``, files moved in under an
+    ``epoch{id}-`` prefix after a previous attempt's are deleted), so a
+    streaming foreachBatch replay of the same micro-batch converges to
+    exactly one copy at any crash point.  Cost vs the blind append:
+    identical distributed work plus O(touched partitions) driver-side
+    renames."""
     enc = enc.repartition(part_col)
     if epoch_id is None:
         enc.write.mode("append").partitionBy(part_col).parquet(path + "/index")
         return
-    import glob
     import os
-    import shutil
 
-    prefix = f"epoch{int(epoch_id)}-"
-    for leftover in glob.glob(
-        os.path.join(path, "index", f"{part_col}=*", prefix + "*")
-    ):
-        os.remove(leftover)
+    from ..epoch_commit import prefix_append
+
     tmp = os.path.join(path, f"index-epoch-{int(epoch_id)}-tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    enc.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
-    for entry in os.listdir(tmp):
-        if not entry.startswith(f"{part_col}="):
-            continue
-        dst_dir = os.path.join(path, "index", entry)
-        os.makedirs(dst_dir, exist_ok=True)
-        for fname in os.listdir(os.path.join(tmp, entry)):
-            if fname.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(tmp, entry, fname),
-                    os.path.join(dst_dir, prefix + fname),
-                )
-    shutil.rmtree(tmp, ignore_errors=True)
+    with prefix_append(os.path.join(path, "index"), tmp, epoch_id, f"{part_col}=*"):
+        enc.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
 
 
 def compact_partitioned(

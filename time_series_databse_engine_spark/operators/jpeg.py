@@ -120,14 +120,6 @@ for _k in range(8):
         )
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    return _C.T @ block @ _C
-
-
-def _fdct2(block: np.ndarray) -> np.ndarray:
-    return _C @ block @ _C.T
-
-
 def _quality_scale(tbl: np.ndarray, quality: int) -> np.ndarray:
     """IJG quality scaling of a base table (libjpeg jcparam.c formula —
     public source)."""

@@ -69,9 +69,3 @@ def num_shuffle_exchanges(df: DataFrame) -> int:
     import re
 
     return len(re.findall(r"\bExchange (hash|range|rounds|SinglePartition)", simple_plan(df)))
-
-
-def has_reused_exchange(df: DataFrame) -> bool:
-    """True when Spark wired one computed Exchange into multiple consumers
-    (self-join both sides computed once)."""
-    return "ReusedExchange" in simple_plan(df)

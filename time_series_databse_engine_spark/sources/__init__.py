@@ -95,12 +95,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view so SQL-form queries can run."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
     """CSV source; pass an explicit schema in production (inference = 2 scans)."""
     reader = spark.read.option("header", str(header).lower())

@@ -3,13 +3,19 @@
 Local tests drive these with a file source over a staged parquet directory
 and a memory sink (`processAllAvailable()` makes it synchronous); on a real
 cluster the same plans run against kafka with checkpointed exactly-once
-``foreachBatch`` sinks.
+``foreachBatch`` sinks.  Every such sink commits through
+:mod:`..epoch_commit` (its docstring states the exactly-once contract)
+and is started by :func:`_foreach_epoch`.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window as W
+
+from ..epoch_commit import EpochDirs, prefix_append
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -21,6 +27,27 @@ EVENT_SCHEMA = T.StructType(
         T.StructField("props", T.StringType(), True),
     ]
 )
+
+
+def _foreach_epoch(stream: DataFrame, write_batch, checkpoint_dir: str):
+    """The sink tail every exactly-once writer here shares:
+    ``write_batch(batch_df, epoch_id)`` per micro-batch, checkpointed in
+    ``checkpoint_dir``, draining what is available."""
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+
+
+def _with_prior(ep: EpochDirs, name: str, fresh: DataFrame) -> DataFrame:
+    """``fresh`` plus the rows of every strictly-prior epoch's ``name``."""
+    prior = ep.prior(name)
+    if not prior:
+        return fresh
+    return fresh.unionByName(
+        fresh.sparkSession.read.parquet(*prior).select(fresh.columns)
+    )
 
 
 def stream_events(spark: SparkSession, src_dir: str, schema: T.StructType = EVENT_SCHEMA) -> DataFrame:
@@ -142,24 +169,15 @@ def stream_to_store(
     checkpoint_dir: str,
     metric_col: str = "event_type",
     rollup_bucket: str | None = None,
-    exactly_once: bool = True,
 ):
     """``foreachBatch`` sink into the hour-partitioned Parquet TimeSeriesStore:
     each micro-batch becomes one immutable sorted append.
 
-    Delivery semantics — EXACTLY-ONCE by default: each micro-batch is
-    written through :meth:`TimeSeriesStore.ingest_epoch`, which keys the
-    batch's data files by the streaming ``epoch_id`` and deletes any
-    files of a previous attempt of the same epoch before moving the new
-    ones in.  The classic at-least-once hole of a blind append — crash
-    AFTER the append but BEFORE the checkpoint commits the epoch, so the
-    restart replays the batch — becomes a self-cleaning replay: the
-    replayed epoch removes its earlier copy and converges to exactly one
-    (idempotent-writer exactly-once, the same contract Spark documents
-    for batchId-keyed foreachBatch sinks).  ``exactly_once=False`` falls
-    back to the plain blind append (no per-epoch renames; duplicates on
-    replay) — only worth it when a downstream ``compact(dedupe=True)``
-    runs anyway.
+    Delivery is EXACTLY-ONCE: each micro-batch is written through
+    :meth:`TimeSeriesStore.ingest_epoch`, which keys the batch's data
+    files by the streaming ``epoch_id``, so a replayed epoch removes its
+    earlier copy and converges to exactly one (the file-prefix protocol
+    of :mod:`..epoch_commit`).
 
     With ``rollup_bucket`` set, each batch also refreshes the materialized
     rollup incrementally for just the days the batch touched — the
@@ -175,20 +193,13 @@ def stream_to_store(
             F.unix_millis(F.col("ts")).alias("ts_ms"),
             F.col("value"),
         )
-        if exactly_once:
-            store.ingest_epoch(pts, epoch_id)
-        else:
-            store.ingest(pts)
+        store.ingest_epoch(pts, epoch_id)
         if rollup_bucket is not None:
             lo = pts.agg(F.min("ts_ms")).collect()[0][0]
             if lo is not None:
                 store.materialize_rollup(rollup_bucket, since_ms=lo)
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def enrich_stream(
@@ -218,10 +229,9 @@ def maintain_ann_index(
     (:func:`operators.similarity.ivf_index_write`): each micro-batch of
     new embeddings is encoded with the index's PINNED sidecar quantizers
     and appended into its cell partitions via the epoch-keyed idempotent
-    append — the same exactly-once contract as :func:`ingest_stream`
-    (batchId-keyed files, delete-before-move on replay), so a crash
-    between the append and the checkpoint commit converges to exactly
-    one copy of the batch.
+    append (the file-prefix protocol of :mod:`..epoch_commit`), so a
+    crash between the append and the checkpoint commit converges to
+    exactly one copy of the batch.
 
     Scale shape: per micro-batch work is O(batch) (one assign+encode
     pass + O(touched cells) renames); the index, its sidecars, and all
@@ -243,11 +253,7 @@ def maintain_ann_index(
             epoch_id=epoch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def maintain_maxsim_index(
@@ -261,9 +267,10 @@ def maintain_maxsim_index(
     :func:`maintain_ann_index`: each micro-batch of new documents is
     vectorized with the index's PINNED ``params`` sidecar geometry
     (dim, chunk_size, id_col — never re-derived) and appended into its
-    bucket partitions via the epoch-keyed idempotent append, so a crash
-    between the append and the checkpoint commit converges to exactly
-    one copy of the batch.
+    bucket partitions via the epoch-keyed idempotent append (the
+    file-prefix protocol of :mod:`..epoch_commit`), so a crash between
+    the append and the checkpoint commit converges to exactly one copy
+    of the batch.
 
     Scale shape: per micro-batch work is O(batch tokens) — one
     chunk-vectorization pass + O(touched buckets) renames; the index
@@ -282,11 +289,7 @@ def maintain_maxsim_index(
             epoch_id=epoch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def stream_decode_media(
@@ -306,55 +309,30 @@ def stream_decode_media(
       decode-health signal (corrupt/unsupported rate per epoch) is one
       scan of a k-row table, never a re-decode of the corpus.
 
-    Delivery is EXACTLY-ONCE by the same idempotent-writer contract as
-    :func:`stream_to_store` / :func:`maintain_ann_index`: both tables'
-    files carry an ``epoch{id}-`` prefix, and a replayed epoch deletes
-    its previous attempt's files before moving the new ones in — so the
-    per-epoch error accounting stays exact across crash replays (no
-    double-counted corrupt rows).  Metrics aggregate from the STAGED
+    Delivery is EXACTLY-ONCE by the file-prefix protocol of
+    :mod:`..epoch_commit` (staged under ``<out_path>/<table>-epoch-<id>-tmp``),
+    so the per-epoch error accounting stays exact across crash replays
+    (no double-counted corrupt rows).  Metrics aggregate from the STAGED
     features files, so the mapInPandas decode runs once per batch, not
     once per output."""
-    import glob
-    import os
-    import shutil
-
     from ..operators.multimodal import extract_features_safe
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prefix = f"epoch{int(epoch_id)}-"
-        staged = {}
-        for name, df_fn in (
-            ("features", lambda: extract_features_safe(batch_df)),
-            (
-                "metrics",
-                lambda: spark.read.parquet(staged["features"])
-                .groupBy("ok", "err_kind")
-                .agg(F.count("*").alias("n"))
-                .withColumn("epoch_id", F.lit(int(epoch_id))),
-            ),
-        ):
-            tmp = os.path.join(out_path, f"{name}-epoch-{int(epoch_id)}-tmp")
-            shutil.rmtree(tmp, ignore_errors=True)
-            df_fn().write.mode("overwrite").parquet(tmp)
-            staged[name] = tmp
-        for name, tmp in staged.items():
-            dst = os.path.join(out_path, name)
-            os.makedirs(dst, exist_ok=True)
-            for leftover in glob.glob(os.path.join(dst, prefix + "*")):
-                os.remove(leftover)
-            for fname in os.listdir(tmp):
-                if fname.endswith(".parquet"):
-                    shutil.move(
-                        os.path.join(tmp, fname), os.path.join(dst, prefix + fname)
-                    )
-            shutil.rmtree(tmp, ignore_errors=True)
+        eid = int(epoch_id)
+        feats, mets = (os.path.join(out_path, t) for t in ("features", "metrics"))
+        with prefix_append(feats, f"{feats}-epoch-{eid}-tmp", eid) as staged:
+            extract_features_safe(batch_df).write.mode("overwrite").parquet(staged)
+            with prefix_append(mets, f"{mets}-epoch-{eid}-tmp", eid) as out:
+                (
+                    batch_df.sparkSession.read.parquet(staged)
+                    .groupBy("ok", "err_kind")
+                    .agg(F.count("*").alias("n"))
+                    .withColumn("epoch_id", F.lit(eid))
+                    .write.mode("overwrite")
+                    .parquet(out)
+                )
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def stream_clean_crawl(
@@ -387,14 +365,11 @@ def stream_clean_crawl(
       n_after_quality, n_survivors) — the crawl-health drop-rate
       signal, one k-row scan, never a corpus recount.
 
-    Delivery is EXACTLY-ONCE by directory-per-epoch idempotence: a
-    replayed epoch recomputes from the SAME inputs — its own epoch dir
-    is excluded from the fingerprint read, so a replay never dedups a
-    page against its previous attempt — then deletes that previous
-    attempt's dirs and renames fresh ones in (delete-before-rename, the
-    same idempotent-writer contract as :func:`stream_to_store` /
-    :func:`stream_decode_media`).  A planted mirror page in epoch N is
-    therefore suppressed exactly once whether N runs once or replays.
+    Delivery is EXACTLY-ONCE by the epoch-dir protocol of
+    :mod:`..epoch_commit`: the fingerprint read takes strictly-prior
+    epochs only, so a replay never dedups a page against its previous
+    attempt, and a planted mirror page in epoch N is suppressed exactly
+    once whether N runs once or replays.
 
     Scale shape per micro-batch: the page HTML is scanned ONCE (strip +
     quality + fingerprint all ride that scan into a staged verdicts
@@ -402,123 +377,90 @@ def stream_clean_crawl(
     fingerprint side stays O(corpus)·16 bytes and the membership probe
     is one hash equi-join — O(batch) work against an ever-growing
     corpus, the :func:`operators.dedup.dedup_incremental` discipline."""
-    import glob
-    import os
-    import shutil
-
     from ..operators import dedup as dedup_ops, text as text_ops, web as web_ops
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        # one pass over page text: strip + ppm + quality + fingerprint
-        stripped = web_ops.strip_html(batch_df, html_col, id_col).withColumn(
-            "visible_ppm",
-            F.expr("CAST(visible_len * 1000000 div raw_len AS BIGINT)"),
-        )
-        ppm_ok = F.col("visible_ppm") >= min_visible_ppm
-        scored = text_ops.quality_score(
-            stripped.filter(ppm_ok), "text", id_col
-        ).select(id_col, "n_tokens", "quality")
-        verdicts = (
-            stripped.withColumn("ppm_ok", ppm_ok)
-            .join(scored, id_col, "left")
-            .select(
-                id_col,
+        with EpochDirs(out_path, epoch_id) as ep:
+            # one pass over page text: strip + ppm + quality + fingerprint
+            stripped = web_ops.strip_html(batch_df, html_col, id_col).withColumn(
                 "visible_ppm",
-                "ppm_ok",
-                "n_tokens",
-                "quality",
-                (F.col("ppm_ok") & (F.col("quality") >= quality_threshold)).alias(
-                    "q_ok"
-                ),
-                F.when(
-                    F.col("ppm_ok") & (F.col("quality") >= quality_threshold),
-                    dedup_ops.fingerprint(F.col("text")),
-                ).alias("content_hash"),
+                F.expr("CAST(visible_len * 1000000 div raw_len AS BIGINT)"),
             )
-        )
-        verdicts_tmp = os.path.join(tmp_root, "verdicts")
-        verdicts.write.mode("overwrite").parquet(verdicts_tmp)
-        v = spark.read.parquet(verdicts_tmp)
-
-        # corpus membership: every PRIOR epoch's fingerprints — the
-        # current epoch's dir (a previous attempt of this replay) is
-        # excluded so recomputation is attempt-independent
-        fp_root = os.path.join(out_path, "fingerprints")
-        prior = [
-            d
-            for d in glob.glob(os.path.join(fp_root, "epoch=*"))
-            if os.path.basename(d) != f"epoch={eid}"
-        ]
-        if prior:
-            hist = spark.read.parquet(*prior).select("content_hash")
-        else:
-            hist = spark.createDataFrame([], "content_hash string")
-
-        qs = v.filter(F.col("q_ok"))
-        fresh = (
-            qs.select(id_col, "content_hash")
-            .join(hist.distinct(), "content_hash", "left_anti")
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    W.partitionBy("content_hash").orderBy(F.col(id_col).asc())
-                ),
-            )
-            .filter(F.col("_rn") == 1)
-            .select(id_col)
-        )
-        survivors = qs.join(fresh, id_col).select(
-            id_col, "n_tokens", "quality", "visible_ppm", "content_hash"
-        )
-        corpus_tmp = os.path.join(tmp_root, "corpus")
-        survivors.write.mode("overwrite").parquet(corpus_tmp)
-        surv = spark.read.parquet(corpus_tmp)
-
-        fp_tmp = os.path.join(tmp_root, "fingerprints")
-        surv.select("content_hash").write.mode("overwrite").parquet(fp_tmp)
-
-        counts = v.agg(
-            F.count("*").alias("n_pages"),
-            F.count_if(F.col("ppm_ok")).alias("n_after_ppm"),
-            F.count_if(F.col("q_ok")).alias("n_after_quality"),
-        ).collect()[0]
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        spark.createDataFrame(
-            [
-                (
-                    eid,
-                    counts.n_pages,
-                    counts.n_after_ppm,
-                    counts.n_after_quality,
-                    surv.count(),
+            ppm_ok = F.col("visible_ppm") >= min_visible_ppm
+            scored = text_ops.quality_score(
+                stripped.filter(ppm_ok), "text", id_col
+            ).select(id_col, "n_tokens", "quality")
+            verdicts = (
+                stripped.withColumn("ppm_ok", ppm_ok)
+                .join(scored, id_col, "left")
+                .select(
+                    id_col,
+                    "visible_ppm",
+                    "ppm_ok",
+                    "n_tokens",
+                    "quality",
+                    (F.col("ppm_ok") & (F.col("quality") >= quality_threshold)).alias(
+                        "q_ok"
+                    ),
+                    F.when(
+                        F.col("ppm_ok") & (F.col("quality") >= quality_threshold),
+                        dedup_ops.fingerprint(F.col("text")),
+                    ).alias("content_hash"),
                 )
-            ],
-            "epoch_id int, n_pages long, n_after_ppm long, "
-            "n_after_quality long, n_survivors long",
-        ).coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+            )
+            # scratch table: staged with the epoch, never published
+            scratch = os.path.join(ep.tmp, "verdicts")
+            verdicts.write.mode("overwrite").parquet(scratch)
+            v = spark.read.parquet(scratch)
 
-        # publish: delete any previous attempt's epoch dirs, rename in
-        for name, tmp in (
-            ("corpus", corpus_tmp),
-            ("fingerprints", fp_tmp),
-            ("metrics", metrics_tmp),
-        ):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
+            # corpus membership: every strictly-prior epoch's fingerprints
+            prior = ep.prior("fingerprints")
+            if prior:
+                hist = spark.read.parquet(*prior).select("content_hash")
+            else:
+                hist = spark.createDataFrame([], "content_hash string")
 
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+            qs = v.filter(F.col("q_ok"))
+            fresh = (
+                qs.select(id_col, "content_hash")
+                .join(hist.distinct(), "content_hash", "left_anti")
+                .withColumn(
+                    "_rn",
+                    F.row_number().over(
+                        W.partitionBy("content_hash").orderBy(F.col(id_col).asc())
+                    ),
+                )
+                .filter(F.col("_rn") == 1)
+                .select(id_col)
+            )
+            survivors = qs.join(fresh, id_col).select(
+                id_col, "n_tokens", "quality", "visible_ppm", "content_hash"
+            )
+            surv = spark.read.parquet(ep.stage("corpus", survivors))
+            ep.stage("fingerprints", surv.select("content_hash"))
+
+            counts = v.agg(
+                F.count("*").alias("n_pages"),
+                F.count_if(F.col("ppm_ok")).alias("n_after_ppm"),
+                F.count_if(F.col("q_ok")).alias("n_after_quality"),
+            ).collect()[0]
+            metrics = spark.createDataFrame(
+                [
+                    (
+                        ep.eid,
+                        counts.n_pages,
+                        counts.n_after_ppm,
+                        counts.n_after_quality,
+                        surv.count(),
+                    )
+                ],
+                "epoch_id int, n_pages long, n_after_ppm long, "
+                "n_after_quality long, n_survivors long",
+            )
+            ep.stage("metrics", metrics.coalesce(1))
+
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def last_committed_epoch(checkpoint_dir: str) -> int | None:
@@ -531,8 +473,6 @@ def last_committed_epoch(checkpoint_dir: str) -> int | None:
     files (and ``epoch{id}-`` names) in place for the replay's
     delete-before-move to find.  Returns None for a fresh/absent
     checkpoint."""
-    import os
-
     commits = os.path.join(checkpoint_dir, "commits")
     if not os.path.isdir(commits):
         return None
@@ -573,30 +513,15 @@ def stream_psi_drift(
       a raw-data recount) and ``alarm`` flags ``psi_running >= alarm``
       (0.25 = the conventional retrain threshold).
 
-    Delivery is EXACTLY-ONCE by directory-per-epoch idempotence: a
-    replayed epoch recomputes from the SAME inputs — the running-counts
-    read takes STRICTLY-PRIOR epochs only (not merely "not my own
-    attempt": later epochs' dirs exist during a replay, and counting
-    them would change a replayed epoch's running PSI) — then deletes
-    the previous attempt's dirs and renames fresh ones in (the
-    :func:`stream_clean_crawl` contract; that one can use the weaker
-    exclusion because its fingerprint tables hold SURVIVORS only, which
-    are disjoint from prior epochs' hashes by construction)."""
+    Delivery is EXACTLY-ONCE by the epoch-dir protocol of
+    :mod:`..epoch_commit`; the running-counts read takes strictly-prior
+    epochs only."""
     from ..operators.profile import psi_bin_counts
 
-    return (
-        stream.writeStream.foreachBatch(
-            _psi_epoch_writer(
-                ref_counts,
-                lambda b: psi_bin_counts(b, col, bounds),
-                out_path,
-                n_bins,
-                alarm,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    writer = _psi_epoch_writer(
+        ref_counts, lambda b: psi_bin_counts(b, col, bounds), out_path, n_bins, alarm
     )
+    return _foreach_epoch(stream, writer, checkpoint_dir)
 
 
 def stream_psi_drift_categorical(
@@ -627,26 +552,21 @@ def stream_psi_drift_categorical(
 
     Epoch-state discipline is IDENTICAL to :func:`stream_psi_drift`
     (shared writer): mergeable (bin, cnt) rows + one metrics row per
-    micro-batch under epoch dirs, strictly-prior running reads,
-    delete-then-rename replay idempotence.  The float recipe is
+    micro-batch under epoch dirs, committed by :mod:`..epoch_commit`.
+    The float recipe is
     :func:`operators.profile.psi_from_counts` over ``top_k + 1`` bins —
     bit-identical to the batch monitor, so one alarm threshold serves
     batch and stream."""
     from ..operators.profile import _categorical_bin_counts
 
-    return (
-        stream.writeStream.foreachBatch(
-            _psi_epoch_writer(
-                ref_counts,
-                lambda b: _categorical_bin_counts(b, col, categories),
-                out_path,
-                top_k + 1,
-                alarm,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+    writer = _psi_epoch_writer(
+        ref_counts,
+        lambda b: _categorical_bin_counts(b, col, categories),
+        out_path,
+        top_k + 1,
+        alarm,
     )
+    return _foreach_epoch(stream, writer, checkpoint_dir)
 
 
 def stream_decayed_topk(
@@ -678,82 +598,50 @@ def stream_decayed_topk(
       rounded to 6 dp, top-k with the keys as tiebreak — the batch
       operator's exact output shape.
 
-    Exactly-once by the :func:`stream_psi_drift` contract: strictly-
-    prior state reads (later epochs' dirs exist during a replay) and
-    delete-then-rename epoch dirs, so a crash replay converges to
+    Exactly-once by the epoch-dir protocol of :mod:`..epoch_commit`
+    (strictly-prior state reads), so a crash replay converges to
     bit-identical state and leaderboards.
     """
-    import glob
-    import os
-    import shutil
-
     keys = keys or ["user_id"]
     if half_life_ms <= 0:
         raise ValueError(f"half_life_ms must be positive, got {half_life_ms}")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        anchor = batch_df.agg(F.max(ts_ms)).collect()[0][0]
-        if anchor is None:
-            return  # empty batch: no state, leaderboard unchanged
-        w = F.pow(
-            F.lit(0.5),
-            (F.lit(int(anchor)) - F.col(ts_ms)) / F.lit(float(half_life_ms)),
-        )
-        state = (
-            batch_df.groupBy(*keys)
-            .agg(F.sum(w).alias("mass"), F.count("*").alias("n_events"))
-            .withColumn("anchor_ms", F.lit(int(anchor)))
-        )
-        state_tmp = os.path.join(tmp_root, "state")
-        state.write.mode("overwrite").parquet(state_tmp)
-        fresh = spark.read.parquet(state_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "state", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        allst = fresh
-        if prior:
-            allst = fresh.unionByName(
-                spark.read.parquet(*prior).select(fresh.columns)
+        with EpochDirs(out_path, epoch_id) as ep:
+            anchor = batch_df.agg(F.max(ts_ms)).collect()[0][0]
+            if anchor is None:
+                return  # empty batch: no state, leaderboard unchanged
+            w = F.pow(
+                F.lit(0.5),
+                (F.lit(int(anchor)) - F.col(ts_ms)) / F.lit(float(half_life_ms)),
             )
-        amax = allst.agg(F.max("anchor_ms")).collect()[0][0]
-        rescale = F.pow(
-            F.lit(0.5),
-            (F.lit(int(amax)) - F.col("anchor_ms")) / F.lit(float(half_life_ms)),
-        )
-        topk = (
-            allst.groupBy(*keys)
-            .agg(
-                F.round(F.sum(F.col("mass") * rescale), 6).alias("decayed_score"),
-                F.sum("n_events").alias("n_events"),
+            state = (
+                batch_df.groupBy(*keys)
+                .agg(F.sum(w).alias("mass"), F.count("*").alias("n_events"))
+                .withColumn("anchor_ms", F.lit(int(anchor)))
             )
-            .orderBy(
-                F.col("decayed_score").desc(), *[F.col(c).asc() for c in keys]
+            fresh = spark.read.parquet(ep.stage("state", state))
+            allst = _with_prior(ep, "state", fresh)
+            amax = allst.agg(F.max("anchor_ms")).collect()[0][0]
+            rescale = F.pow(
+                F.lit(0.5),
+                (F.lit(int(amax)) - F.col("anchor_ms")) / F.lit(float(half_life_ms)),
             )
-            .limit(k)
-        )
-        topk_tmp = os.path.join(tmp_root, "topk")
-        topk.coalesce(1).write.mode("overwrite").parquet(topk_tmp)
+            topk = (
+                allst.groupBy(*keys)
+                .agg(
+                    F.round(F.sum(F.col("mass") * rescale), 6).alias("decayed_score"),
+                    F.sum("n_events").alias("n_events"),
+                )
+                .orderBy(
+                    F.col("decayed_score").desc(), *[F.col(c).asc() for c in keys]
+                )
+                .limit(k)
+            )
+            ep.stage("topk", topk.coalesce(1))
 
-        for name, tmp in (("state", state_tmp), ("topk", topk_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def _psi_epoch_writer(
@@ -766,58 +654,28 @@ def _psi_epoch_writer(
     prior running reads, exactly-once epoch dirs, metrics row, alarm)
     is monitor-independent.  See :func:`stream_psi_drift` for the full
     delivery contract."""
-    import glob
-    import os
-    import shutil
-
     from ..operators.profile import psi_from_counts
 
     ref_c = ref_counts.select("bin", "cnt")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        cnts = bin_fn(batch_df)
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        # STRICTLY-PRIOR epochs only (not just "not my own attempt"):
-        # a replayed epoch must compute the same running PSI as its
-        # first run, and later epochs' dirs exist during a replay
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
-            running = fresh.unionByName(
-                spark.read.parquet(*prior).select("bin", "cnt")
+        with EpochDirs(out_path, epoch_id) as ep:
+            fresh = spark.read.parquet(ep.stage("counts", bin_fn(batch_df)))
+            running = _with_prior(ep, "counts", fresh)
+            psi_batch = psi_from_counts(ref_c, fresh, n_bins=n_bins)
+            psi_run = psi_from_counts(ref_c, running, n_bins=n_bins)
+            b_row = psi_batch.select("psi").limit(1).collect()
+            r_row = psi_run.select("psi").limit(1).collect()
+            pb = float(b_row[0].psi) if b_row else 0.0
+            pr = float(r_row[0].psi) if r_row else 0.0
+            n_rows = fresh.agg(F.sum("cnt")).collect()[0][0] or 0
+            metrics = spark.createDataFrame(
+                [(ep.eid, int(n_rows), pb, pr, pr >= alarm)],
+                "epoch_id int, n_rows long, psi_batch double, "
+                "psi_running double, alarm boolean",
             )
-        psi_batch = psi_from_counts(ref_c, fresh, n_bins=n_bins)
-        psi_run = psi_from_counts(ref_c, running, n_bins=n_bins)
-        b_row = psi_batch.select("psi").limit(1).collect()
-        r_row = psi_run.select("psi").limit(1).collect()
-        pb = float(b_row[0].psi) if b_row else 0.0
-        pr = float(r_row[0].psi) if r_row else 0.0
-        n_rows = fresh.agg(F.sum("cnt")).collect()[0][0] or 0
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        spark.createDataFrame(
-            [(eid, int(n_rows), pb, pr, pr >= alarm)],
-            "epoch_id int, n_rows long, psi_batch double, "
-            "psi_running double, alarm boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
-
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
+            ep.stage("metrics", metrics.coalesce(1))
 
     return write_batch
 
@@ -845,88 +703,57 @@ def stream_burn_rate(
     :func:`operators.timeseries.burn_from_counts` (the identical float
     recipe, so the stream's burn table == the batch op on the union of
     all rows seen), and writes ``metrics/epoch=N`` with the newest
-    bucket's burn pair + alert.  Exactly-once by the
-    :func:`stream_psi_drift` contract: strictly-prior running reads
-    (later epochs' dirs exist during a replay), delete-then-rename
-    epoch dirs, so a replayed epoch is attempt-independent."""
-    import glob
-    import os
-    import shutil
-
+    bucket's burn pair + alert.  Exactly-once by the epoch-dir protocol
+    of :mod:`..epoch_commit`, so a replayed epoch is attempt-independent."""
     from ..operators.timeseries import burn_from_counts
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        err = F.expr(error_col)
-        cnts = (
-            batch_df.select(
-                (F.col(ts_ms) - F.col(ts_ms) % F.lit(bucket_ms)).alias(
-                    "bucket_ms"
-                ),
-                err.cast("int").alias("e"),
-            )
-            .groupBy("bucket_ms")
-            .agg(F.count("*").alias("n"), F.sum("e").cast("long").alias("n_err"))
-        )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        merged = fresh
-        if prior:
-            merged = fresh.unionByName(
-                spark.read.parquet(*prior).select("bucket_ms", "n", "n_err")
-            )
-        merged = merged.groupBy("bucket_ms").agg(
-            F.sum("n").alias("n"), F.sum("n_err").alias("n_err")
-        )
-        burn = burn_from_counts(
-            merged,
-            slo=slo,
-            bucket_ms=bucket_ms,
-            long_buckets=long_buckets,
-            alert_burn=alert_burn,
-        )
-        latest = burn.orderBy(F.col("bucket_ms").desc()).limit(1).collect()
-        n_rows = fresh.agg(F.sum("n")).collect()[0][0] or 0
-        row = latest[0] if latest else None
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        spark.createDataFrame(
-            [
-                (
-                    eid,
-                    int(n_rows),
-                    int(row.bucket_ms) if row else None,
-                    float(row.burn_short) if row else None,
-                    float(row.burn_long) if row else None,
-                    bool(row.alert) if row else False,
+        with EpochDirs(out_path, epoch_id) as ep:
+            err = F.expr(error_col)
+            cnts = (
+                batch_df.select(
+                    (F.col(ts_ms) - F.col(ts_ms) % F.lit(bucket_ms)).alias(
+                        "bucket_ms"
+                    ),
+                    err.cast("int").alias("e"),
                 )
-            ],
-            "epoch_id int, n_rows long, latest_bucket_ms long, "
-            "burn_short double, burn_long double, alert boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+                .groupBy("bucket_ms")
+                .agg(F.count("*").alias("n"), F.sum("e").cast("long").alias("n_err"))
+            )
+            fresh = spark.read.parquet(ep.stage("counts", cnts))
+            merged = (
+                _with_prior(ep, "counts", fresh)
+                .groupBy("bucket_ms")
+                .agg(F.sum("n").alias("n"), F.sum("n_err").alias("n_err"))
+            )
+            burn = burn_from_counts(
+                merged,
+                slo=slo,
+                bucket_ms=bucket_ms,
+                long_buckets=long_buckets,
+                alert_burn=alert_burn,
+            )
+            latest = burn.orderBy(F.col("bucket_ms").desc()).limit(1).collect()
+            n_rows = fresh.agg(F.sum("n")).collect()[0][0] or 0
+            row = latest[0] if latest else None
+            metrics = spark.createDataFrame(
+                [
+                    (
+                        ep.eid,
+                        int(n_rows),
+                        int(row.bucket_ms) if row else None,
+                        float(row.burn_short) if row else None,
+                        float(row.burn_long) if row else None,
+                        bool(row.alert) if row else False,
+                    )
+                ],
+                "epoch_id int, n_rows long, latest_bucket_ms long, "
+                "burn_short double, burn_long double, alert boolean",
+            )
+            ep.stage("metrics", metrics.coalesce(1))
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def scd2_current(spark: SparkSession, out_path: str) -> DataFrame:
@@ -937,7 +764,6 @@ def scd2_current(spark: SparkSession, out_path: str) -> DataFrame:
     partitions its batch touched), so "the snapshot" is the union of
     per-partition latest epochs, not a single epoch dir."""
     import glob
-    import os
 
     latest = []
     for pdir in sorted(glob.glob(os.path.join(out_path, "current", "part=*"))):
@@ -994,34 +820,18 @@ def stream_scd2(
     numbers included (the recompute's versions are re-based onto the
     prior open row's version).
 
-    Exactly-once by the :func:`stream_psi_drift` contract: strictly-
-    prior state reads and delete-then-rename epoch dirs (now per
-    partition) make a replayed epoch attempt-independent — a crash
-    between partition renames is healed because the replay re-derives
-    every touched partition from strictly-prior epochs only.
+    Exactly-once by the epoch-dir protocol of :mod:`..epoch_commit`,
+    with each touched ``current/part=K`` published as its own table — a
+    crash between partition renames is healed because the replay
+    re-derives every touched partition from strictly-prior epochs only.
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.timeseries import scd2_build
 
     order = order or [ts_ms]
     pcol = F.pmod(F.xxhash64(F.col(key)), F.lit(n_parts))
 
-    def _latest_prior(part: int, eid: int) -> str | None:
-        dirs = glob.glob(
-            os.path.join(out_path, "current", f"part={part}", "epoch=*")
-        )
-        prior = [
-            d for d in dirs
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        return max(prior, key=lambda d: int(d.rsplit("=", 1)[1])) if prior else None
-
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
         # n_parts is baked into the on-disk current/part=K layout: a
         # restart with a different value would re-hash keys to new
         # partitions while stale partitions stayed each key's "latest
@@ -1043,9 +853,7 @@ def stream_scd2(
             os.makedirs(out_path, exist_ok=True)
             with open(marker, "w") as fh:
                 fh.write(str(n_parts))
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
+        ep = EpochDirs(out_path, epoch_id)
         ev_cols = [key, attr, ts_ms] + [
             c for c in order if c not in (key, attr, ts_ms)
         ]
@@ -1055,7 +863,9 @@ def stream_scd2(
             r[0] for r in batch.select(pcol.alias("_p")).distinct().collect()
         )
         prior_dirs = [
-            d for d in (_latest_prior(p, eid) for p in parts_touched) if d
+            max(dirs, key=lambda d: int(d.rsplit("=", 1)[1]))
+            for dirs in (ep.prior(f"current/part={p}") for p in parts_touched)
+            if dirs
         ]
         if prior_dirs:
             cur = spark.read.parquet(*prior_dirs)
@@ -1138,35 +948,21 @@ def stream_scd2(
         untouched = cur.join(touched, key, "left_anti")
         new_cur = untouched.unionByName(new_cur_touched)
 
-        closed_tmp = os.path.join(tmp_root, "closed")
-        cur_tmp = os.path.join(tmp_root, "current")
-        closed_now.select(
-            key, attr, "valid_from_ms", "valid_to_ms", "version"
-        ).write.mode("overwrite").parquet(closed_tmp)
-        new_cur.withColumn("part", pcol).write.mode("overwrite").partitionBy(
-            "part"
-        ).parquet(cur_tmp)
+        with ep:
+            ep.stage(
+                "closed",
+                closed_now.select(key, attr, "valid_from_ms", "valid_to_ms", "version"),
+            )
+            new_cur.withColumn("part", pcol).write.mode("overwrite").partitionBy(
+                "part"
+            ).parquet(os.path.join(ep.tmp, "current"))
+            # per-partition publish: only touched partitions get a new
+            # epoch; every touched key ends the batch with an open run, so
+            # each touched partition always has ≥1 row and Spark wrote its dir
+            for p in parts_touched:
+                ep.publish(f"current/part={p}")
 
-        dst = os.path.join(out_path, "closed", f"epoch={eid}")
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.rename(closed_tmp, dst)
-        # per-partition rename: only touched partitions get a new epoch
-        for p in parts_touched:
-            # every touched key ends the batch with an open run, so each
-            # touched partition always has ≥1 row and Spark wrote its dir
-            src = os.path.join(cur_tmp, f"part={p}")
-            pdst = os.path.join(out_path, "current", f"part={p}", f"epoch={eid}")
-            os.makedirs(os.path.dirname(pdst), exist_ok=True)
-            shutil.rmtree(pdst, ignore_errors=True)
-            os.rename(src, pdst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def stream_ks_drift(
@@ -1204,9 +1000,8 @@ def stream_ks_drift(
       row-identical to ``ks_drift`` on the union of all rows seen
       (asserted in-test).
 
-    Exactly-once by the :func:`stream_psi_drift` contract: the running
-    read takes STRICTLY-PRIOR epochs only, then delete-then-rename
-    epoch dirs make a replayed epoch attempt-independent.
+    Exactly-once by the epoch-dir protocol of :mod:`..epoch_commit`
+    (strictly-prior running reads).
 
     ``quantize`` is the monitor's resolution dial for CONTINUOUS
     columns: values snap to the nearest multiple of ``quantize``
@@ -1222,10 +1017,6 @@ def stream_ks_drift(
     (the hazard SCALE.md states; this dial is its remedy, exercised in
     test_streaming_ks_drift_quantize_bounds_state).
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.profile import ks_from_counts
 
     if quantize is not None:
@@ -1238,55 +1029,28 @@ def stream_ks_drift(
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        v_expr = F.col(col)
-        if quantize is not None:
-            v_expr = F.round(v_expr / F.lit(float(quantize))) * F.lit(float(quantize))
-        cnts = (
-            batch_df.select(F.col(key), v_expr.alias("v"))
-            .where(F.col("v").isNotNull())
-            .groupBy(key, "v")
-            .agg(F.count("*").alias("cnt"))
-        )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
+        with EpochDirs(out_path, epoch_id) as ep:
+            v_expr = F.col(col)
+            if quantize is not None:
+                v_expr = F.round(v_expr / F.lit(float(quantize))) * F.lit(float(quantize))
+            cnts = (
+                batch_df.select(F.col(key), v_expr.alias("v"))
+                .where(F.col("v").isNotNull())
+                .groupBy(key, "v")
+                .agg(F.count("*").alias("cnt"))
+            )
+            fresh = spark.read.parquet(ep.stage("counts", cnts))
             running = (
-                fresh.unionByName(
-                    spark.read.parquet(*prior).select(key, "v", "cnt")
-                )
+                _with_prior(ep, "counts", fresh)
                 .groupBy(key, "v")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        metrics = ks_from_counts(ref_vc, running, key).withColumn(
-            "epoch_id", F.lit(eid)
-        )
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+            metrics = ks_from_counts(ref_vc, running, key).withColumn(
+                "epoch_id", F.lit(ep.eid)
+            )
+            ep.stage("metrics", metrics.coalesce(1))
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def stream_embedding_drift(
@@ -1324,85 +1088,57 @@ def stream_embedding_drift(
       stream state's metrics match the batch op on the union of rows
       seen (asserted in-test, 6-dp equality).
 
-    Exactly-once by the :func:`stream_psi_drift` contract:
-    strictly-prior running reads + delete-then-rename epoch dirs.
+    Exactly-once by the epoch-dir protocol of :mod:`..epoch_commit`
+    (strictly-prior running reads).
     """
-    import glob
-    import os
-    import shutil
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        moments = (
-            batch_df.where(
-                F.col(group_col).isNotNull() & F.col(vec_col).isNotNull()
+        with EpochDirs(out_path, epoch_id) as ep:
+            moments = (
+                batch_df.where(
+                    F.col(group_col).isNotNull() & F.col(vec_col).isNotNull()
+                )
+                .select(
+                    F.col(group_col).alias("g"),
+                    F.posexplode(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
+                        "d", "x"
+                    ),
+                )
+                .groupBy("g", "d")
+                .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
             )
-            .select(
-                F.col(group_col).alias("g"),
-                F.posexplode(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
-                    "d", "x"
-                ),
-            )
-            .groupBy("g", "d")
-            .agg(F.sum("x").alias("sx"), F.count("*").alias("n"))
-        )
-        state_tmp = os.path.join(tmp_root, "state")
-        moments.write.mode("overwrite").parquet(state_tmp)
-        fresh = spark.read.parquet(state_tmp)
-
-        prior = [
-            p
-            for p in glob.glob(os.path.join(out_path, "state", "epoch=*"))
-            if int(os.path.basename(p).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
+            fresh = spark.read.parquet(ep.stage("state", moments))
             running = (
-                fresh.unionByName(spark.read.parquet(*prior).select("g", "d", "sx", "n"))
+                _with_prior(ep, "state", fresh)
                 .groupBy("g", "d")
                 .agg(F.sum("sx").alias("sx"), F.sum("n").alias("n"))
             )
-        cur = running.select(
-            "g", "d", F.round(F.col("sx") / F.col("n"), 6).alias("mc"), "n"
-        )
-        ref = ref_centroids.select(
-            F.col(group_col).alias("g"), F.col("d"), F.col("mr")
-        )
-        per_dim = cur.join(ref, ["g", "d"], "inner")
-        folded = per_dim.groupBy("g").agg(
-            F.array_sort(F.collect_list(F.struct("d", "mr", "mc"))).alias("_a"),
-            F.max("n").cast("long").alias("n_cur"),
-        )
-        dot_rc = F.aggregate("_a", F.lit(0.0), lambda acc, s: acc + s["mr"] * s["mc"])
-        nrm_r = F.sqrt(F.aggregate("_a", F.lit(0.0), lambda acc, s: acc + s["mr"] * s["mr"]))
-        nrm_c = F.sqrt(F.aggregate("_a", F.lit(0.0), lambda acc, s: acc + s["mc"] * s["mc"]))
-        metrics = folded.select(
-            F.col("g").alias(group_col),
-            "n_cur",
-            F.when((nrm_r > 0) & (nrm_c > 0), F.round(dot_rc / (nrm_r * nrm_c), 6)).alias(
-                "centroid_cosine"
-            ),
-            F.when(nrm_r > 0, F.round(nrm_c / nrm_r, 6)).alias("norm_ratio"),
-        ).withColumn("epoch_id", F.lit(eid))
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+            cur = running.select(
+                "g", "d", F.round(F.col("sx") / F.col("n"), 6).alias("mc"), "n"
+            )
+            ref = ref_centroids.select(
+                F.col(group_col).alias("g"), F.col("d"), F.col("mr")
+            )
+            per_dim = cur.join(ref, ["g", "d"], "inner")
+            folded = per_dim.groupBy("g").agg(
+                F.array_sort(F.collect_list(F.struct("d", "mr", "mc"))).alias("_a"),
+                F.max("n").cast("long").alias("n_cur"),
+            )
+            dot_rc = F.aggregate("_a", F.lit(0.0), lambda acc, s: acc + s["mr"] * s["mc"])
+            nrm_r = F.sqrt(F.aggregate("_a", F.lit(0.0), lambda acc, s: acc + s["mr"] * s["mr"]))
+            nrm_c = F.sqrt(F.aggregate("_a", F.lit(0.0), lambda acc, s: acc + s["mc"] * s["mc"]))
+            metrics = folded.select(
+                F.col("g").alias(group_col),
+                "n_cur",
+                F.when((nrm_r > 0) & (nrm_c > 0), F.round(dot_rc / (nrm_r * nrm_c), 6)).alias(
+                    "centroid_cosine"
+                ),
+                F.when(nrm_r > 0, F.round(nrm_c / nrm_r, 6)).alias("norm_ratio"),
+            ).withColumn("epoch_id", F.lit(ep.eid))
+            ep.stage("metrics", metrics.coalesce(1))
 
-        for name, tmp in (("state", state_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def stream_conformal(
@@ -1435,9 +1171,8 @@ def stream_conformal(
       threshold is row-identical to ``conformal_threshold`` on the
       union of all rows seen (asserted in-test).
 
-    Exactly-once by the :func:`stream_ks_drift` contract: running
-    reads take STRICTLY-PRIOR epochs only, delete-then-rename epoch
-    dirs make a replayed epoch attempt-independent.
+    Exactly-once by the epoch-dir protocol of :mod:`..epoch_commit`
+    (strictly-prior running reads).
 
     ``quantize`` is the same continuous-column state dial as
     :func:`stream_ks_drift` — scores snap to the nearest multiple
@@ -1446,65 +1181,34 @@ def stream_conformal(
     only if you snap UP at serve time (threshold + q/2 covers the
     cell); the exact default is correct for discrete scores.
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.sampling import conformal_from_counts
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        v_expr = F.col(score_col)
-        if quantize is not None:
-            v_expr = F.round(v_expr / F.lit(float(quantize))) * F.lit(
-                float(quantize)
-            )
-        cnts = (
-            batch_df.select(F.col(group_col).alias("g"), v_expr.alias("v"))
-            .where(F.col("v").isNotNull() & F.col("g").isNotNull())
-            .groupBy("g", "v")
-            .agg(F.count("*").alias("cnt"))
-        )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            d
-            for d in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(d).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
-            running = (
-                fresh.unionByName(
-                    spark.read.parquet(*prior).select("g", "v", "cnt")
+        with EpochDirs(out_path, epoch_id) as ep:
+            v_expr = F.col(score_col)
+            if quantize is not None:
+                v_expr = F.round(v_expr / F.lit(float(quantize))) * F.lit(
+                    float(quantize)
                 )
+            cnts = (
+                batch_df.select(F.col(group_col).alias("g"), v_expr.alias("v"))
+                .where(F.col("v").isNotNull() & F.col("g").isNotNull())
+                .groupBy("g", "v")
+                .agg(F.count("*").alias("cnt"))
+            )
+            fresh = spark.read.parquet(ep.stage("counts", cnts))
+            running = (
+                _with_prior(ep, "counts", fresh)
                 .groupBy("g", "v")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        metrics = conformal_from_counts(
-            running, alpha=alpha, group_out_col=group_col
-        ).withColumn("epoch_id", F.lit(eid))
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+            metrics = conformal_from_counts(
+                running, alpha=alpha, group_out_col=group_col
+            ).withColumn("epoch_id", F.lit(ep.eid))
+            ep.stage("metrics", metrics.coalesce(1))
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)
 
 
 def stream_benford(
@@ -1535,62 +1239,30 @@ def stream_benford(
       state's row is row-identical to ``benford_audit`` on the union
       of all rows seen (asserted in-test).
 
-    Exactly-once by the :func:`stream_ks_drift` contract: running
-    reads take STRICTLY-PRIOR epochs only, delete-then-rename epoch
-    dirs make a replayed epoch attempt-independent.
+    Exactly-once by the epoch-dir protocol of :mod:`..epoch_commit`
+    (strictly-prior running reads).
     """
-    import glob
-    import os
-    import shutil
-
     from ..operators.profile import benford_from_counts
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        eid = int(epoch_id)
-        tmp_root = os.path.join(out_path, "_tmp", f"epoch-{eid}")
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-        cents = F.round(F.col(value_col) * 100).cast("long")
-        d = F.substring(cents.cast("string"), 1, 1).cast("int")
-        cnts = (
-            batch_df.where(F.col(group_col).isNotNull() & (cents > 0))
-            .groupBy(F.col(group_col).alias("g"), d.alias("d"))
-            .agg(F.count("*").alias("cnt"))
-        )
-        counts_tmp = os.path.join(tmp_root, "counts")
-        cnts.write.mode("overwrite").parquet(counts_tmp)
-        fresh = spark.read.parquet(counts_tmp)
-
-        prior = [
-            p
-            for p in glob.glob(os.path.join(out_path, "counts", "epoch=*"))
-            if int(os.path.basename(p).split("=", 1)[1]) < eid
-        ]
-        running = fresh
-        if prior:
+        with EpochDirs(out_path, epoch_id) as ep:
+            cents = F.round(F.col(value_col) * 100).cast("long")
+            d = F.substring(cents.cast("string"), 1, 1).cast("int")
+            cnts = (
+                batch_df.where(F.col(group_col).isNotNull() & (cents > 0))
+                .groupBy(F.col(group_col).alias("g"), d.alias("d"))
+                .agg(F.count("*").alias("cnt"))
+            )
+            fresh = spark.read.parquet(ep.stage("counts", cnts))
             running = (
-                fresh.unionByName(
-                    spark.read.parquet(*prior).select("g", "d", "cnt")
-                )
+                _with_prior(ep, "counts", fresh)
                 .groupBy("g", "d")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        metrics = benford_from_counts(
-            running, mad_crit=mad_crit, group_out_col=group_col
-        ).withColumn("epoch_id", F.lit(eid))
-        metrics_tmp = os.path.join(tmp_root, "metrics")
-        metrics.coalesce(1).write.mode("overwrite").parquet(metrics_tmp)
+            metrics = benford_from_counts(
+                running, mad_crit=mad_crit, group_out_col=group_col
+            ).withColumn("epoch_id", F.lit(ep.eid))
+            ep.stage("metrics", metrics.coalesce(1))
 
-        for name, tmp in (("counts", counts_tmp), ("metrics", metrics_tmp)):
-            dst = os.path.join(out_path, name, f"epoch={eid}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.rename(tmp, dst)
-        shutil.rmtree(tmp_root, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_epoch(stream, write_batch, checkpoint_dir)

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .epoch_commit import move_in, prefix_append
+
 SHARD_DURATION_MS = 3_600_000  # one-hour buckets, reference engine/insight.cpp:6
 
 POINT_SCHEMA = T.StructType(
@@ -39,6 +41,24 @@ POINT_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType(), False),
     ]
 )
+
+
+def _observed(pts: DataFrame, name: str):
+    """``pts`` with ingest-quality counters (rows, null values, min/max
+    ts) riding its next job, and the Observation that reads them."""
+    from pyspark.sql import Observation
+
+    obs = Observation(name)
+    return (
+        pts.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.col("value").isNull().cast("long")).alias("null_values"),
+            F.min("ts_ms").alias("min_ts_ms"),
+            F.max("ts_ms").alias("max_ts_ms"),
+        ),
+        obs,
+    )
 
 
 class TimeSeriesStore:
@@ -90,6 +110,40 @@ class TimeSeriesStore:
             pass
 
     # ------------------------------------------------------------------ write
+    def _shuffled(
+        self, df: DataFrame, target_partitions: int | None, layout: str
+    ) -> DataFrame:
+        """(metric, ts_ms, value, bucket) rows shuffled once for the write
+        (``layout``: see :meth:`ingest`)."""
+        if layout not in ("hash", "range"):
+            raise ValueError(f"layout must be hash|range, got {layout!r}")
+        if "ts_ms" not in df.columns:
+            df = df.withColumn("ts_ms", F.unix_millis(F.col("ts")))
+        pts = df.select(
+            F.col("metric").cast("string"),
+            F.col("ts_ms").cast("long"),
+            F.col("value").cast("double"),
+            (F.floor(F.col("ts_ms") / self.bucket_ms)).cast("long").alias(self.bucket_col),
+        )
+        n = target_partitions or self.spark.sparkContext.defaultParallelism
+        if layout == "hash":
+            return pts.repartition(n, self.bucket_col, "metric")
+        return pts.repartitionByRange(n, self.bucket_col, "metric", "ts_ms")
+
+    def _write(self, pts: DataFrame, path: str, mode: str = "overwrite") -> None:
+        """Write ``pts`` partitioned by bucket, each file sorted by (bucket,
+        metric, ts_ms) for row-group min/max pruning.  Parquet v2 data
+        pages: DELTA_BINARY_PACKED on the sorted ts_ms column ≈ the
+        reference's delta-of-delta codec (shard.cpp:107-126) at the format
+        layer — measured 7.78 B/pt vs the reference's 8.2."""
+        (
+            pts.sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
+            .write.mode(mode)
+            .option("parquet.writer.version", "v2")
+            .partitionBy(self.bucket_col)
+            .parquet(path)
+        )
+
     def ingest(
         self,
         df: DataFrame,
@@ -123,44 +177,11 @@ class TimeSeriesStore:
         zero extra scan, unlike a count()/agg() audit query, which at
         100 TB would double the ingest cost.
         """
-        if layout not in ("hash", "range"):
-            raise ValueError(f"layout must be hash|range, got {layout!r}")
-        if "ts_ms" not in df.columns:
-            df = df.withColumn("ts_ms", F.unix_millis(F.col("ts")))
-        pts = df.select(
-            F.col("metric").cast("string"),
-            F.col("ts_ms").cast("long"),
-            F.col("value").cast("double"),
-            (F.floor(F.col("ts_ms") / self.bucket_ms)).cast("long").alias(self.bucket_col),
-        )
-        n = target_partitions or self.spark.sparkContext.defaultParallelism
-        pts = (
-            pts.repartition(n, self.bucket_col, "metric")
-            if layout == "hash"
-            else pts.repartitionByRange(n, self.bucket_col, "metric", "ts_ms")
-        )
+        pts = self._shuffled(df, target_partitions, layout)
         obs = None
         if observe:
-            from pyspark.sql import Observation
-
-            obs = Observation("ingest")
-            pts = pts.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.col("value").isNull().cast("long")).alias("null_values"),
-                F.min("ts_ms").alias("min_ts_ms"),
-                F.max("ts_ms").alias("max_ts_ms"),
-            )
-        (
-            pts.sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
-            .write.mode("append")
-            # parquet v2 data pages: DELTA_BINARY_PACKED on the sorted ts_ms
-            # column ≈ the reference's delta-of-delta codec (shard.cpp:107-126)
-            # at the format layer — measured 7.78 B/pt vs the reference's 8.2
-            .option("parquet.writer.version", "v2")
-            .partitionBy(self.bucket_col)
-            .parquet(self.path)
-        )
+            pts, obs = _observed(pts, "ingest")
+        self._write(pts, self.path, "append")
         self._invalidate()
         return obs.get if obs is not None else None
 
@@ -175,71 +196,20 @@ class TimeSeriesStore:
         for a streaming ``foreachBatch`` sink.
 
         Same write shape as :meth:`ingest` (one sorted, hour-partitioned
-        Parquet append), but every data file lands in its partition
-        directory under an ``epoch{id}-`` file-name prefix, and the write
-        FIRST deletes any files carrying that prefix — the leftovers of a
-        previous attempt of the same epoch that crashed between the
-        append and the streaming checkpoint's commit.  Replaying an epoch
-        therefore converges to exactly one copy of its rows, at any crash
-        point:
-
-        * crash before any move   → nothing visible, replay writes fresh;
-        * crash mid-move          → partial epoch files visible, replay
-          deletes them all and re-moves a complete set;
-        * crash after the move but before the checkpoint commit — the
-          at-least-once hole in a blind append — → replay deletes the
-          complete previous copy and writes an identical one.
+        Parquet append), committed by :func:`epoch_commit.prefix_append`:
+        every data file lands in its partition directory under an
+        ``epoch{id}-`` name prefix after the files of any previous attempt
+        of the epoch are deleted, so a replay converges to exactly one copy
+        of its rows at any crash point (see :mod:`epoch_commit`).  Staged
+        under ``<path>.epoch-<id>-tmp``.
 
         Cost vs :meth:`ingest`: identical distributed write work plus
-        O(touched partitions) driver-side renames (the stage-then-move
-        is the same metadata-commit shape as :meth:`compact`'s swap, but
-        per-epoch files are moved in, never replacing existing data).
+        O(touched partitions) driver-side renames.
         """
-        import glob
-        import os
-        import shutil
-
-        prefix = f"epoch{int(epoch_id)}-"
-        for leftover in glob.glob(
-            os.path.join(self.path, self.bucket_col + "=*", prefix + "*")
-        ):
-            os.remove(leftover)
         tmp = self.path.rstrip("/") + f".epoch-{int(epoch_id)}-tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        if "ts_ms" not in df.columns:
-            df = df.withColumn("ts_ms", F.unix_millis(F.col("ts")))
-        pts = df.select(
-            F.col("metric").cast("string"),
-            F.col("ts_ms").cast("long"),
-            F.col("value").cast("double"),
-            (F.floor(F.col("ts_ms") / self.bucket_ms)).cast("long").alias(self.bucket_col),
-        )
-        n = target_partitions or self.spark.sparkContext.defaultParallelism
-        pts = (
-            pts.repartition(n, self.bucket_col, "metric")
-            if layout == "hash"
-            else pts.repartitionByRange(n, self.bucket_col, "metric", "ts_ms")
-        )
-        (
-            pts.sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
-            .write.mode("overwrite")
-            .option("parquet.writer.version", "v2")
-            .partitionBy(self.bucket_col)
-            .parquet(tmp)
-        )
-        for entry in os.listdir(tmp):
-            if not entry.startswith(self.bucket_col + "="):
-                continue
-            dst_dir = os.path.join(self.path, entry)
-            os.makedirs(dst_dir, exist_ok=True)
-            for fname in os.listdir(os.path.join(tmp, entry)):
-                if not fname.endswith(".parquet"):
-                    continue
-                shutil.move(
-                    os.path.join(tmp, entry, fname),
-                    os.path.join(dst_dir, prefix + fname),
-                )
-        shutil.rmtree(tmp, ignore_errors=True)
+        pts = self._shuffled(df, target_partitions, layout)
+        with prefix_append(self.path, tmp, epoch_id, self.bucket_col + "=*"):
+            self._write(pts, tmp)
         self._invalidate()
 
     def ingest_checked(
@@ -265,38 +235,12 @@ class TimeSeriesStore:
         the metrics dict (with ``published: True``); raises ValueError
         carrying the metrics when a gate fails.
         """
-        import os
         import shutil
 
-        from pyspark.sql import Observation
-
-        if "ts_ms" not in df.columns:
-            df = df.withColumn("ts_ms", F.unix_millis(F.col("ts")))
-        pts = df.select(
-            F.col("metric").cast("string"),
-            F.col("ts_ms").cast("long"),
-            F.col("value").cast("double"),
-            (F.floor(F.col("ts_ms") / self.bucket_ms)).cast("long").alias(self.bucket_col),
-        )
-        n = target_partitions or self.spark.sparkContext.defaultParallelism
-        pts = pts.repartition(n, self.bucket_col, "metric")
-        obs = Observation("wap")
-        pts = pts.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col("value").isNull().cast("long")).alias("null_values"),
-            F.min("ts_ms").alias("min_ts_ms"),
-            F.max("ts_ms").alias("max_ts_ms"),
-        )
+        pts, obs = _observed(self._shuffled(df, target_partitions, "hash"), "wap")
         tmp = self.path.rstrip("/") + ".wap-tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        (
-            pts.sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
-            .write.mode("overwrite")
-            .option("parquet.writer.version", "v2")
-            .partitionBy(self.bucket_col)
-            .parquet(tmp)
-        )
+        self._write(pts, tmp)
         m = dict(obs.get)
         problems = []
         if m["rows"] < min_rows:
@@ -314,17 +258,7 @@ class TimeSeriesStore:
         if problems:
             shutil.rmtree(tmp, ignore_errors=True)
             raise ValueError(f"WAP audit failed: {'; '.join(problems)} | metrics={m}")
-        # publish: move data files in (append semantics, epoch-move shape)
-        for entry in os.listdir(tmp):
-            if not entry.startswith(self.bucket_col + "="):
-                continue
-            dst_dir = os.path.join(self.path, entry)
-            os.makedirs(dst_dir, exist_ok=True)
-            for fname in os.listdir(os.path.join(tmp, entry)):
-                if fname.endswith(".parquet"):
-                    shutil.move(
-                        os.path.join(tmp, entry, fname), os.path.join(dst_dir, fname)
-                    )
+        move_in(tmp, self.path)  # publish: append semantics, no prefix
         shutil.rmtree(tmp, ignore_errors=True)
         self._invalidate()
         m["published"] = True
@@ -348,9 +282,6 @@ class TimeSeriesStore:
         append-to-shard path); identical rows collapse deterministically,
         conflicting values for the same (metric, ts) are both kept.
         """
-        import os
-        import shutil
-
         try:
             df = self.spark.read.parquet(self.path)
         except Exception:
@@ -359,14 +290,7 @@ class TimeSeriesStore:
             df = df.dropDuplicates(["metric", "ts_ms", "value", self.bucket_col])
         tmp = self.path.rstrip("/") + ".compact-tmp"
         n = target_partitions or self.spark.sparkContext.defaultParallelism
-        (
-            df.repartitionByRange(n, self.bucket_col, "metric", "ts_ms")
-            .sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
-            .write.mode("overwrite")
-            .option("parquet.writer.version", "v2")
-            .partitionBy(self.bucket_col)
-            .parquet(tmp)
-        )
+        self._write(df.repartitionByRange(n, self.bucket_col, "metric", "ts_ms"), tmp)
         self._swap_in_partitions(tmp)
 
     def _swap_in_partitions(self, tmp: str) -> None:
@@ -433,14 +357,11 @@ class TimeSeriesStore:
         n = target_partitions or max(
             2, min(len(buckets), self.spark.sparkContext.defaultParallelism)
         )
-        (
-            merged.repartition(n, self.bucket_col, "metric")
-            .sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
-            .select("metric", "ts_ms", "value", self.bucket_col)
-            .write.mode("overwrite")
-            .option("parquet.writer.version", "v2")
-            .partitionBy(self.bucket_col)
-            .parquet(tmp)
+        self._write(
+            merged.repartition(n, self.bucket_col, "metric").select(
+                "metric", "ts_ms", "value", self.bucket_col
+            ),
+            tmp,
         )
         self._swap_in_partitions(tmp)
 
@@ -490,14 +411,7 @@ class TimeSeriesStore:
         n = target_partitions or max(
             2, min(len(buckets), self.spark.sparkContext.defaultParallelism)
         )
-        (
-            keep.repartition(n, self.bucket_col, "metric")
-            .sortWithinPartitions(self.bucket_col, "metric", "ts_ms")
-            .write.mode("overwrite")
-            .option("parquet.writer.version", "v2")
-            .partitionBy(self.bucket_col)
-            .parquet(tmp)
-        )
+        self._write(keep.repartition(n, self.bucket_col, "metric"), tmp)
         # partitions whose every row matched the predicate produce no dir
         # in the staging write — drop them from the table (swap only
         # replaces dirs present in tmp)

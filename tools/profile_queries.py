@@ -73,22 +73,27 @@ def main() -> None:
                 fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
                 ts.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
-            df = fn(spark, SF_DIR)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            if tag != "none":
-                with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as fh:
-                    fh.write(plan)
             rec = {
                 "query": name,
                 "min_sec": round(min(ts), 3),
                 "mean_sec": round(sum(ts) / len(ts), 3),
                 "runs": [round(t, 3) for t in ts],
-                **plan_shape(plan),
             }
         except Exception as e:  # noqa: BLE001
             rec = {"query": name, "error": str(e)[:500]}
+        else:
+            # a failing plan dump keeps the timings already collected
+            try:
+                df = fn(spark, SF_DIR)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                rec.update(plan_shape(plan))
+                if tag != "none":
+                    with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as fh:
+                        fh.write(plan)
+            except Exception as e:  # noqa: BLE001
+                rec["plan_error"] = str(e)[:500]
         out[name] = rec
         print(json.dumps(rec), flush=True)
         with open(f"/tmp/profile_{tag}.json", "w") as fh:
